@@ -926,6 +926,13 @@ def minhash_band_pairs_open(
     materializes doc×doc, and the verify join is sort-merge-able on the
     candidate doc ids.
     """
+    # 0 keeps every banding collision (minhash_candidate_quality); `mid`
+    # (the exact verify's rounding boundary, below) must fit long literals
+    if not 0 <= threshold <= 1:
+        raise ValueError(f"jaccard threshold must be in [0, 1], got {threshold}")
+    mid = (Fraction(threshold) + Fraction(math.nextafter(threshold, 0.0))) / 2
+    if mid.denominator + mid.numerator >= 2**63:  # 0 < threshold < ~2^-9
+        raise ValueError(f"jaccard threshold {threshold} too small for the exact verify")
     r = n_hashes // n_bands
     if tids is None:
         # open vocabulary ⇒ the dictionary must not bottleneck either: the
@@ -1033,7 +1040,6 @@ def minhash_band_pairs_open(
     #     DECIMAL(38,0) products: mid's numerator is ~2^53 and set sizes
     #     are doc-bounded, so BIGINT would overflow past ~1e3-token
     #     docs; decimal stays exact to 38 digits.
-    mid = (Fraction(threshold) + Fraction(math.nextafter(threshold, 0.0))) / 2
     inter_dec = inter.cast("decimal(20,0)")
     sum_dec = (F.col("n_a") + F.col("n_b")).cast("decimal(20,0)")
     jac_ok = (

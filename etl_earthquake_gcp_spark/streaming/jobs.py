@@ -20,7 +20,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import fix_nanos_ts
+from ..sources.tables import fix_nanos_ts, table_schema
 
 
 def _src_fingerprint(path: str) -> str:
@@ -43,9 +43,9 @@ def _src_fingerprint(path: str) -> str:
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source replay of the events table (schema pinned — streaming
-    reads never infer, SURVEY §1.2). Nanos→micros fix as in batch
-    (sources/tables.py).
+    """File-source replay of the events table (schema pinned from the
+    declared catalog — streaming reads never infer, SURVEY §1.2).
+    Nanos→micros fix as in batch (sources/tables.py).
 
     The file source requires a *directory*; testdata ships one parquet file,
     so stage a symlink dir under /tmp (read-only testdata is never touched).
@@ -59,7 +59,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = f"{sf_dir}/events.parquet"
     key = f"{src}:{_src_fingerprint(src)}"
     stage = f"/tmp/spark_stream_stage_{hashlib.md5(key.encode()).hexdigest()[:8]}"
@@ -77,7 +76,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         link = f"{stage}/events.parquet"
         if not os.path.exists(link):
             os.symlink(src, link)
-    schema = spark.read.parquet(src).schema
+    schema = table_schema(spark, "events", src)
     stream = spark.readStream.schema(schema).parquet(stage)
     return fix_nanos_ts(stream)
 
@@ -133,9 +132,8 @@ def _events_stream_multibatch(
             os.utime(part, (now + i, now + i))  # mtime order == replay order
         open(done, "w").close()
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(f"{stage}/part-000.parquet").schema
+    schema = table_schema(spark, "events", f"{stage}/part-000.parquet")
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

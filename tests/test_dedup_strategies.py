@@ -5,11 +5,13 @@ mapInArrow cosine twin must be row-identical to its mapInPandas sibling."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_earthquake_gcp_spark.operators.dedup import (
     jaccard_pairs_bitmask,
     minhash_band_pairs,
+    minhash_band_pairs_open,
     minhash_incremental_pairs,
     ppjoin_pairs,
 )
@@ -20,6 +22,14 @@ from etl_earthquake_gcp_spark.plans.vector_queries import (
 from etl_earthquake_gcp_spark.sources.tables import load_table
 
 from .conftest import SF_DIR
+
+
+@pytest.mark.parametrize("threshold", [-0.1, 1.5, float("nan"), 1e-300])
+def test_open_verify_rejects_out_of_range_threshold(threshold):
+    """The exact verify turns the threshold into long literals; outside
+    [0, 1], or too small to fit them, it must fail before any plan is built."""
+    with pytest.raises(ValueError, match="threshold"):
+        minhash_band_pairs_open(threshold=threshold)
 
 
 def test_ppjoin_equals_bruteforce(spark):

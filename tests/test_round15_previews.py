@@ -246,7 +246,7 @@ def test_weighted_median_constructed(spark, tmp_path):
          ("z", 10.0, 1.0, 7, 1), ("z", 10.0, 1.0, 7, 2),
          ("z", 20.0, 0.0, 8, 1)],
         "l_returnflag string, l_extendedprice double, l_quantity double,"
-        " l_orderkey long, l_linenumber long",
+        " l_orderkey long, l_linenumber int",
     )
     sf_dir = str(tmp_path)
     df.coalesce(1).write.parquet(f"{sf_dir}/lineitem.parquet")

@@ -258,6 +258,7 @@ def test_basket_lift_boundary_matches_duckdb(spark, tmp_path):
     rows += [(o, 3) for o in range(617, 642)]
     pdf = pd.DataFrame(rows, columns=["l_orderkey", "l_partkey"])
     pdf["l_linenumber"] = 1
+    pdf = pdf.astype({"l_linenumber": "int32"})  # the declared lineitem type
     pdf["l_quantity"] = 1.0
     pdf.to_parquet(tmp_path / "lineitem.parquet")
 

@@ -27,7 +27,12 @@ Usage:
     python tools/ledger_check.py --verify-current
         # recompute the upcoming round's head from the ledger alone and
         # diff it against plans/__init__.py::_DRIVER_PRIORITY[:50];
-        # exit nonzero on any mismatch.
+        # exit nonzero on any mismatch. The exit code means something
+        # only at registration time, before the target round's
+        # CORRECTNESS_r*.json lands. The tool always computes the head
+        # of the upcoming round, so once the registered round's rows are
+        # recorded the computed head moves on and the mode exits 1 on a
+        # correct registry.
 """
 
 from __future__ import annotations
